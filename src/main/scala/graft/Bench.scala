@@ -928,14 +928,19 @@ object Bench {
     // Silence shutdown-time logging (unpersist of localCheckpointed slices
     // WARNs per RDD) so nothing lands in the tail after the metric line.
     spark.sparkContext.setLogLevel("OFF")
-    // Mute stderr for the teardown: Spark's stop occasionally prints a
-    // benign Promise/ThreadPoolExecutor shutdown stack trace from a
+    // Divert stderr for the teardown: Spark's stop occasionally prints
+    // a benign Promise/ThreadPoolExecutor shutdown stack trace from a
     // daemon thread (it preceded — and under sbt's logger, drowned —
     // the metric line in every BENCH_rNN tail since r14). Everything
     // measurable is already written; nothing after this point may
-    // pollute the tail the driver parses.
+    // pollute the tail the driver parses, but a failing shutdown stays
+    // diagnosable from the side log.
     System.err.flush()
-    System.setErr(new java.io.PrintStream(java.io.OutputStream.nullOutputStream()))
+    System.setErr(
+      try new java.io.PrintStream(
+        new java.io.FileOutputStream("BENCH_TEARDOWN.log"), true)
+      catch { case _: Throwable =>
+        new java.io.PrintStream(java.io.OutputStream.nullOutputStream()) })
     SparkEntry.release()
     spark.stop()
     System.out.println(line)

@@ -180,7 +180,12 @@ final case class DatalogConf(
       * relational loop's full-support merge shuffle + job per
       * iteration. The tiny-fixpoint latency amortization the
       * non-aggregate paths already get from driver-resident frontiers,
-      * extended to support aggregates. */
+      * extended to support aggregates. Static ceiling: 2^20 rows per
+      * static, checked before any row moves — a static whose plan-stats
+      * estimate is above `spark.sql.autoBroadcastJoinThreshold` (or
+      * RDD-backed) is sized by its exact row count from its single
+      * materialization (the persisted static the relational loop
+      * reads), so a rejection ships no rows to the driver. */
     supportLocal: String = "auto",
     /** `spark.datalog.recursion.supportlocal.maxentries` (default
       * 2M): driver support-map entry ceiling — a mid-loop overflow
@@ -198,7 +203,14 @@ final case class DatalogConf(
       * the `supportlocal` treatment for plain monotonic aggregates:
       * state (group → best value) in driver memory, rules as lowered
       * local steps, zero scheduled jobs per iteration. Overflow of
-      * `maxentries` bails to the looped paths. */
+      * `maxentries` bails to the looped paths. Static ceiling: 2^20
+      * rows per static, checked before any row moves — a static whose
+      * plan-stats estimate is above
+      * `spark.sql.autoBroadcastJoinThreshold` (or RDD-backed) is sized
+      * by its exact row count from its single materialization (the
+      * validated static claim the fragment loop then reuses, else the
+      * persisted static), so a rejection ships no rows and schedules
+      * no job the looped path would not run anyway. */
     monotonicLocal: String = "auto",
     /** `spark.datalog.recursion.monotoniclocal.maxentries` (default
       * 2M): driver aggregate-state entry ceiling for the bail. */
@@ -222,7 +234,10 @@ final case class DatalogConf(
       * live in driver hash sets, rules fire as lowered local steps
       * from the frontier; overflow of the shared
       * `monotoniclocal.maxentries`/`autoentries` caps bails to the
-      * looped round-robin. */
+      * looped round-robin. Statics obey the `monotoniclocal` ceiling
+      * of 2^20 rows each, sized the same way: by exact count from
+      * their single materialization (the round-robin's static claim,
+      * else the persisted static), no rows shipped on rejection. */
     mutualLocal: String = "auto",
     /** `spark.datalog.recursion.monotonic.fragmentstate`
       * (auto|true|false, default auto): keep the mmin/mmax fixpoint

@@ -78,7 +78,11 @@ final class Evaluator(
     else evalNonRecursive(p)
   })
 
-  private def baseResolver: RuleCompiler.Resolver = (pred, _) => predDF(pred)
+  /** Rules compiled outside the fixpoint variants (exit rules,
+    * non-recursive strata) read a static's materialization once one
+    * exists (see `materializedStatic`) instead of its source plan. */
+  private def baseResolver: RuleCompiler.Resolver = (pred, _) =>
+    materializedStatics.get(pred).fold(predDF(pred))(_._1)
 
   /** All rule compiles route through here so the session's
     * `spark.datalog.crossjoin` policy (warn|error|allow on disjoint
@@ -271,6 +275,34 @@ final class Evaluator(
       df
     })
 
+  /** The one materialization of each static relation this evaluator
+    * made, with its exact row count: the validated hash claim
+    * `claimBigStatics` built (its checkpoint job returns the count), or
+    * else the persisted `cachedStatic`, counted once. The driver- and
+    * task-resident arms size big statics from here (see
+    * `staticRowsMemo`), so the count never costs a second scan. */
+  private val materializedStatics = mutable.Map[String, (DataFrame, Long)]()
+
+  private def materializedStatic(pred: String): (DataFrame, Long) =
+    materializedStatics.getOrElseUpdate(pred, {
+      val c = cachedStatic(pred)
+      // a fresh plan reads through the cache (the memoized frame's plan
+      // may predate the persist); one job fills the cache and counts it
+      // (Dataset.count adds an aggregation exchange: a second job under
+      // AQE)
+      val fresh = org.apache.spark.sql.GraftColumnBridge
+        .onSession(c.sparkSession, c)
+      (fresh, fresh.queryExecution.toRdd.count())
+    })
+
+  /** `spark.sql.autoBroadcastJoinThreshold` in bytes: statics whose
+    * plan-stats estimate is at or under it count as small. */
+  private def autoBroadcastBytes: Long = try {
+    org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      org.apache.spark.sql.SparkSession.active.conf
+        .get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
+  } catch { case _: Throwable => 10L * 1024 * 1024 }
+
   // ------------------------------------------------ checkpoint lifecycle
 
   /** Every localCheckpointed RDD this evaluator created, so `close()`
@@ -302,6 +334,8 @@ final class Evaluator(
     subEvaluators.clear()
     persistedStatic.values.foreach(_.unpersist(blocking = false))
     persistedStatic.clear()
+    materializedStatics.clear()
+    staticClaims.clear()
     trackedRDDs.foreach(_.unpersist(blocking = false))
     trackedRDDs.clear()
     memo.clear()
@@ -342,11 +376,14 @@ final class Evaluator(
 
   /** Collect at most `cap` rows, probed via a limit(cap+1) job — never
     * an unbounded collect. Some(rows) when the result is complete; None
-    * when it exceeds the cap, in which case the caller falls back to
-    * the checkpointed cluster path (the probe's work is re-done there,
-    * but driver memory stays bounded even on a one-iteration blowup —
-    * e.g. a tiny local delta non-linearly joined against a hub-heavy
-    * EDB). */
+    * when it exceeds the cap, after up to cap+1 rows reached the driver
+    * and were dropped: driver memory stays bounded even on a
+    * one-iteration blowup (e.g. a tiny local delta non-linearly joined
+    * against a hub-heavy EDB), but the rejection is not free. Callers
+    * use it where the result is expected to fit — iteration results
+    * under the local caps, seeds, statics whose plan-stats estimate is
+    * under the broadcast threshold; a bigger static is sized by its
+    * exact count instead (`staticRowsMemo`). */
   private def collectCapped(df: DataFrame, cap: Int)
       : Option[Array[org.apache.spark.sql.Row]] = {
     val probe = df.limit(cap + 1).collect()
@@ -574,7 +611,8 @@ final class Evaluator(
       p: String,
       pivot: Seq[Int],
       exitFilter: Map[String, DataFrame => DataFrame],
-      nParts: Int): Option[DataFrame] = {
+      nParts: Int,
+      claimFallback: () => Unit): Option[DataFrame] = {
     val spark = org.apache.spark.sql.SparkSession.active
     val recRules = clique.recursiveRules(p)
     val exits = clique.exitRules(p)
@@ -599,9 +637,9 @@ final class Evaluator(
       else None
 
     // memo static collects: the same (pred, within-atom equalities) is
-    // collected once even when several rules/atoms reference it (see
-    // staticRowsMemo: predDF not cachedStatic — collect-once, no
-    // persist pinning). The ECONOMIC ceiling applies here too: a
+    // collected once even when several rules/atoms reference it, and a
+    // big static is sized by exact count first (see staticRowsMemo).
+    // The ECONOMIC ceiling applies here too: a
     // static past it makes the driver collect + multimap build +
     // broadcast the dominant bill regardless of seed count
     // (dl_sssp_localiter sf10: a 1-row seed behind a 2.6M-row static
@@ -609,7 +647,7 @@ final class Evaluator(
     val staticRows = staticRowsMemo(
       if (conf.localIterateAutoSeedRows > 0)
         conf.localIterateMaxStaticRows.min(conf.localIterateAutoSeedRows)
-      else conf.localIterateMaxStaticRows)
+      else conf.localIterateMaxStaticRows, claimFallback)
 
     /** Lower one rule: the recursive atom binds env slots 0..arity-1;
       * each static atom (body order, left-to-right SIPS like the rule
@@ -807,24 +845,46 @@ final class Evaluator(
     Some(seedW)
   }
 
-  /** Memoized capped static-relation collects for the local fixpoint
-    * paths: the same (pred, within-atom equalities) is collected once
-    * even when several rules/atoms reference it. */
-  private def staticRowsMemo(maxRows: Long)
+  /** Memoized static-relation collects for the driver- and
+    * task-resident fixpoint arms: the same (pred, within-atom
+    * equalities) is collected once even when several rules/atoms
+    * reference it. None when the static has more than `maxRows` rows
+    * (the arm is rejected) or holds a null.
+    *
+    * Sizing is decided before any row moves. A static whose plan-stats
+    * estimate is at or under `spark.sql.autoBroadcastJoinThreshold` is
+    * small: one capped collect from its plan. A bigger or sentinel
+    * (RDD-backed) estimate is sized by the EXACT row count of the
+    * static's one materialization (`materializedStatic`): over the
+    * ceiling rejects with zero rows shipped and no job beyond the
+    * materialization; under it collects from the materialization
+    * instead of re-reading the source. `claimFallback` builds the
+    * claims of the distributed arm the caller falls back to (the
+    * memoized `claimBigStatics` call that arm makes itself), so that
+    * claim is the materialization and the fallback reuses it. */
+  private def staticRowsMemo(maxRows: Long, claimFallback: () => Unit = () => ())
       : (String, Seq[(Int, Int)]) => Option[IndexedSeq[IndexedSeq[Any]]] = {
+    val cap = maxRows.min(1L << 24).toInt
+    var claimed = false
     val memo =
       mutable.Map[(String, Seq[(Int, Int)]), Option[IndexedSeq[IndexedSeq[Any]]]]()
+    def filtered(df0: DataFrame, eqs: Seq[(Int, Int)]): DataFrame =
+      eqs.foldLeft(df0) { case (d, (a, b)) =>
+        d.filter(d(d.columns(a)) === d(d.columns(b)))
+      }
     (pred, eqs) =>
       memo.getOrElseUpdate((pred, eqs), {
-        // predDF, not cachedStatic: these paths read the static exactly
-        // once (the collect below) — persisting it would pin dead
-        // blocks until close(); a bail to a looped path re-persists
-        // through that path's own cachedStatic
-        val df0 = predDF(pred)
-        val df = eqs.foldLeft(df0) { case (d, (a, b)) =>
-          d.filter(d(d.columns(a)) === d(d.columns(b)))
-        }
-        collectCapped(df, maxRows.min(1L << 24).toInt)
+        val rows =
+          if (predDF(pred).queryExecution.optimizedPlan.stats.sizeInBytes <=
+              BigInt(autoBroadcastBytes))
+            collectCapped(filtered(predDF(pred), eqs), cap)
+          else {
+            if (!claimed) { claimed = true; claimFallback() }
+            val (mat, n) = materializedStatic(pred)
+            // the exact count bounds this collect
+            if (n > cap) None else Some(filtered(mat, eqs).collect())
+          }
+        rows
           // null-free contract: the lowered probes/filters use plain
           // equality and unboxed compares — a null row bails the path
           .filter(_.forall(!_.anyNull))
@@ -1035,7 +1095,8 @@ final class Evaluator(
       clique: Analysis#Clique,
       p: String,
       aggIdx: Int,
-      maxStaticRows: Long)
+      maxStaticRows: Long,
+      claimFallback: () => Unit)
       : Option[(DataFrame, org.apache.spark.sql.types.StructType,
           IndexedSeq[Evaluator.MonoRule], Boolean)] = {
     import Evaluator._
@@ -1056,7 +1117,7 @@ final class Evaluator(
     val aggLong = aggType == LongType
     if (!aggLong && aggType != IntegerType) return None
 
-    val staticRows = staticRowsMemo(maxStaticRows)
+    val staticRows = staticRowsMemo(maxStaticRows, claimFallback)
 
     def parse(r: Rule): Option[MonoRule] = {
       val (steps, slot, envType, _) =
@@ -1110,11 +1171,12 @@ final class Evaluator(
       clique: Analysis#Clique,
       p: String,
       isMin: Boolean,
-      aggIdx: Int): Option[DataFrame] = {
+      aggIdx: Int,
+      claimFallback: () => Unit): Option[DataFrame] = {
     import Evaluator._
     val spark = org.apache.spark.sql.SparkSession.active
     val (seed, schema, rules, aggLong) =
-      lowerMonotonicClique(clique, p, aggIdx, 1L << 20)
+      lowerMonotonicClique(clique, p, aggIdx, 1L << 20, claimFallback)
         .getOrElse(return None)
     // two ceilings: autoentries is the ECONOMIC one (the single-thread
     // driver loop loses to the distributed merge well before driver
@@ -1219,14 +1281,16 @@ final class Evaluator(
     * exit-rule union plus one memoized collect per static relation —
     * ZERO per iteration. `exitFilter` (bound queries) applies to the
     * seeds exactly as in the looped path. Overflow of the shared
-    * monotoniclocal entry caps, or a static past 1M rows, bails to the
-    * looped paths (work is redone there; driver memory stays bounded).
+    * monotoniclocal entry caps, or a static past 2^20 rows (sized by
+    * exact count, see staticRowsMemo), bails to the looped paths (work
+    * is redone there; driver memory stays bounded).
     *
     * Reference semantics: MutualRecursion.scala:28-131 (round-robin
     * to simultaneous fixpoint of all clique members). */
   private def driverMutualFixpoint(
       clique: Analysis#Clique,
-      exitFilter: Map[String, DataFrame => DataFrame])
+      exitFilter: Map[String, DataFrame => DataFrame],
+      claimFallback: () => Unit)
       : Option[Map[String, DataFrame]] = {
     import Evaluator._
     val spark = org.apache.spark.sql.SparkSession.active
@@ -1267,7 +1331,7 @@ final class Evaluator(
 
     // ---- lower every member's recursive rules (statics ≤ 1M rows,
     // the driverMonotonicFixpoint cap)
-    val staticRows = staticRowsMemo(1L << 20)
+    val staticRows = staticRowsMemo(1L << 20, claimFallback)
     val lowered = mutable.ArrayBuffer[MutualRule]()
     for (p <- preds; r <- clique.recursiveRules(p)) {
       val recs = r.body.collect {
@@ -1367,7 +1431,8 @@ final class Evaluator(
       p: String,
       isMin: Boolean,
       aggIdx: Int,
-      reAgg: DataFrame => DataFrame): Option[DataFrame] = {
+      reAgg: DataFrame => DataFrame,
+      claimFallback: () => Unit): Option[DataFrame] = {
     val spark = org.apache.spark.sql.SparkSession.active
     val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val (seed, schema, rules, aggLong) =
@@ -1376,7 +1441,7 @@ final class Evaluator(
         // driver collect + multimap + broadcast dominate any wave
         if (conf.localIterateAutoSeedRows > 0)
           conf.localIterateMaxStaticRows.min(conf.localIterateAutoSeedRows)
-        else conf.localIterateMaxStaticRows)
+        else conf.localIterateMaxStaticRows, claimFallback)
         .getOrElse(return None)
     // economic seed ceiling — see localIterate (the monotonic wave's
     // per-partition HashMap fixpoint has the same boxed-row economics:
@@ -1574,7 +1639,7 @@ final class Evaluator(
             // a huge sentinel), but the populated InMemoryRelation
             // reports real cached-batch sizes
             val df = cachedStatic(sp)
-            df.count()
+            materializedStatic(sp)
             df.queryExecution.optimizedPlan.stats.sizeInBytes <=
               BigInt(conf.broadcastThreshold)
           }
@@ -1834,6 +1899,14 @@ final class Evaluator(
     if (conf.lightPlanning) pin(cpConf, "false")
     try {
 
+    // the static claims of the looped paths below (see the claims
+    // comment there); the resident arms prime them to size big statics
+    def claimStatics(): Map[String, DataFrame] =
+      if (conf.joinType != "auto" || conf.staticClaims == "false" ||
+          (conf.staticClaims == "auto" && broadcastStatic)) Map.empty
+      else claimBigStatics(
+        preds.flatMap(p => clique.recursiveRules(p)), clique.preds, nParts)
+
     // Within-task local fixpoint (opt-in): a decomposable program runs
     // its whole recursion in one mapPartitions wave — see localIterate.
     // Requires the broadcastStatic conditions (stable pivot, statics
@@ -1842,7 +1915,7 @@ final class Evaluator(
     if (conf.localIterate && broadcastStatic && !clique.monotonic &&
         preds.size == 1) {
       localIterate(clique, preds.head, pivots(preds.head), exitFilter,
-          nParts) match {
+          nParts, () => claimStatics()) match {
         case Some(df) => return Map(preds.head -> df)
         case None => ()
       }
@@ -1853,7 +1926,7 @@ final class Evaluator(
     // the local caps; any ineligibility falls through to the looped
     // round-robin below.
     if (conf.mutualLocal != "false" && !clique.monotonic && preds.size > 1) {
-      driverMutualFixpoint(clique, exitFilter) match {
+      driverMutualFixpoint(clique, exitFilter, () => claimStatics()) match {
         case Some(m) => return m
         case None => ()
       }
@@ -1880,11 +1953,7 @@ final class Evaluator(
     // pay the sizing probe. Statics at or under
     // spark.sql.autoBroadcastJoinThreshold never claim (free plan-stats
     // pre-screen — sf0.1 plans unchanged, zero new jobs).
-    val claimedStatic: Map[String, DataFrame] =
-      if (conf.joinType != "auto" || conf.staticClaims == "false" ||
-          (conf.staticClaims == "auto" && broadcastStatic)) Map.empty
-      else claimBigStatics(
-        preds.flatMap(p => clique.recursiveRules(p)), clique.preds, nParts)
+    val claimedStatic: Map[String, DataFrame] = claimStatics()
     // forced claims outrank the broadcast loop; auto never reaches here
     // with broadcastStatic set
     val bcStatic = broadcastStatic && claimedStatic.isEmpty
@@ -2757,11 +2826,28 @@ final class Evaluator(
     val exits = clique.exitRules(p)
     if (exits.isEmpty) throw new EvalException(s"$p has no exit rules")
 
+    // Which distributed arm runs when the resident arms below decline:
+    // forced fragment state outranks the copart keep⊎delta path (an
+    // explicit `true` is a cluster user asking for the append-only
+    // economics); `auto` keeps copart's measured cluster behavior and
+    // engages fragments only where the legacy loop would run.
+    val copartMono = groupCols.nonEmpty && copartitionEnabled(stablePivot = false)
+    val fragment = groupCols.nonEmpty && (conf.monotonicFragment == "true" ||
+      (!copartMono && conf.monotonicFragment != "false" &&
+        fragmentBodiesVerifiablyMonotone(p, aggIdx)))
+    // the fragment loop's static claims, which the resident arms prime
+    // to size big statics (see staticRowsMemo)
+    def claimFallback(): Unit =
+      if (fragment && conf.staticClaims != "false")
+        claimBigStatics(clique.recursiveRules(p), clique.preds,
+          fragmentParts(org.apache.spark.sql.SparkSession.active))
+
     // Within-task path (opt-in, spark.datalog.recursion.localiterate):
     // the whole aggregate fixpoint in one mapPartitions wave + one
     // merge aggregation; any ineligible shape falls through.
     if (conf.localIterate) {
-      localIterateMonotonic(clique, p, isMin, aggIdx, reAgg) match {
+      localIterateMonotonic(clique, p, isMin, aggIdx, reAgg,
+          () => claimFallback()) match {
         case Some(df) =>
           memo(p) = df
           return
@@ -2769,17 +2855,13 @@ final class Evaluator(
       }
     }
 
-    // Forced fragment state outranks the copart keep⊎delta path (an
-    // explicit `true` is a cluster user asking for the append-only
-    // economics); `auto` keeps copart's measured cluster behavior and
-    // engages fragments only where the legacy loop would run (below).
     if (groupCols.nonEmpty && conf.monotonicFragment == "true") {
       evalMonotonicFragment(clique, p, isMin, groupCols, aggCol, headOrder, reAgg)
       return
     }
     // Cluster path: delta-sized merges against a group-key-claimed
     // state instead of re-shuffling the whole state each iteration.
-    if (groupCols.nonEmpty && copartitionEnabled(stablePivot = false)) {
+    if (copartMono) {
       evalMonotonicCopart(clique, p, isMin, groupCols, aggCol, headOrder, reAgg)
       return
     }
@@ -2787,7 +2869,8 @@ final class Evaluator(
     // no scheduled jobs per iteration; any ineligibility or cap
     // overflow falls through to the looped path below.
     if (conf.monotonicLocal != "false") {
-      driverMonotonicFixpoint(clique, p, isMin, aggIdx) match {
+      driverMonotonicFixpoint(clique, p, isMin, aggIdx,
+          () => claimFallback()) match {
         case Some(df) =>
           memo(p) = df
           return
@@ -2805,8 +2888,7 @@ final class Evaluator(
     // superseded rows to rule bodies, harmless only under monotone
     // derivations; unverifiable shapes keep the legacy loop, whose
     // state view only ever exposes the current best per key.
-    if (groupCols.nonEmpty && conf.monotonicFragment != "false" &&
-        fragmentBodiesVerifiablyMonotone(p, aggIdx)) {
+    if (fragment) {
       evalMonotonicFragment(clique, p, isMin, groupCols, aggCol, headOrder, reAgg)
       return
     }
@@ -3157,11 +3239,14 @@ final class Evaluator(
     * big. Local sf0.1 fixpoints (statics a few MB) therefore see ZERO
     * new jobs and identical plans; the claims engage exactly where the
     * per-round rebuild bill exists. `spark.datalog.recursion.
-    * staticclaims=false` opts out (callers check). */
+    * staticclaims=false` opts out (callers check).
+    *
+    * Claims are memoized per evaluator (`staticClaims`): a static is
+    * scanned from its source once, however many fixpoints, and
+    * resident-arm sizing passes (`staticRowsMemo`), ask for it. */
   private def claimBigStatics(
       recRules: Seq[Rule], isCliquePred: String => Boolean,
       nParts: Int): Map[String, DataFrame] = {
-    val spark = org.apache.spark.sql.SparkSession.active
     val staticOccs: Seq[(String, Seq[Int])] = for {
       r <- recRules
       (a, i) <- r.bodyAtoms.zipWithIndex
@@ -3183,10 +3268,6 @@ final class Evaluator(
     }
     val negatedStatics = recRules.flatMap(_.bodyAtoms)
       .filter(a => !isCliquePred(a.pred) && a.negated).map(_.pred).toSet
-    val autoBroadcastBytes: Long = try {
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
-    } catch { case _: Throwable => 10L * 1024 * 1024 }
     val out: Map[String, DataFrame] = staticOccs
       .groupBy(_._1).collect {
         // every occurrence must agree on one non-empty key set, and the
@@ -3197,50 +3278,91 @@ final class Evaluator(
               !negatedStatics(sp) =>
           sp -> occs.head._2
       }.flatMap { case (sp, keyIdx) =>
-        // free pre-screen: a plan-stats estimate at or under the
-        // broadcast threshold stays on Catalyst's per-iteration
-        // broadcast, whose build cost that size bounds (and a claimed
-        // LogicalRDD has no stats, so it would LOSE the conversion).
-        // Estimate-big statics claim DIRECTLY from the source plan —
-        // one scan+shuffle+checkpoint job; the iterations read only
-        // the claim, so persisting the unclaimed side first (as the
-        // r18 fragment path did: persist+count+re-scan) is pure setup
-        // overhead (~7s vs ~2.5s on sf10's 2.6M-row edge set).
-        // SENTINEL estimates (RDD-backed EDBs report
-        // defaultSizeInBytes = Long.MaxValue, and join estimates
-        // compound it) are no measurement at all: those pay the old
-        // persist+count so a tiny registered RDD keeps its broadcast
-        // loop instead of being claimed blind.
-        val sentinel = BigInt(1L) << 50 // ~1 PiB: past any real estimate
-        val df0 = predDF(sp)
-        val est = df0.queryExecution.optimizedPlan.stats.sizeInBytes
-        val (df, size) =
-          if (est < sentinel) (df0, est)
-          else {
-            val c = cachedStatic(sp)
-            c.count()
-            // fresh frame over the same plan: the memoized Dataset's
-            // lazy optimizedPlan was forced for the estimate above and
-            // would keep reporting the pre-persist sentinel — a new
-            // QueryExecution picks up the populated InMemoryRelation's
-            // real cached-batch sizes
-            val fresh = org.apache.spark.sql.GraftColumnBridge
-              .onSession(spark, c)
-            (fresh, fresh.queryExecution.optimizedPlan.stats.sizeInBytes)
-          }
-        if (size <= BigInt(autoBroadcastBytes)) None
-        else {
-          val keyCols = keyIdx.map(df.columns(_))
-          val (ck, held, _) = org.apache.spark.sql.GraftColumnBridge
-            .checkpointWithPartitioning(
-              df.repartition(nParts, keyCols.map(df(_)): _*), keyCols, nParts)
-          track(ck)
-          if (held) Some(sp -> ck) else { retire(ck); None }
-        }
+        staticClaims.getOrElseUpdate((sp, keyIdx, nParts),
+          claimStatic(sp, keyIdx, nParts)).map(sp -> _)
       }.toMap
     lastClaimedStatics = out.keySet
     out
   }
+
+  /** claimBigStatics results per (pred, key positions, partitions):
+    * every fixpoint of this evaluator, and the resident arms that size
+    * a static ahead of their fallback, share one claim per layout. */
+  private val staticClaims =
+    mutable.Map[(String, Seq[Int], Int), Option[DataFrame]]()
+
+  /** One static's claim decision for `claimBigStatics`; records the
+    * static's materialization and exact count in `materializedStatics`. */
+  private def claimStatic(
+      sp: String, keyIdx: Seq[Int], nParts: Int): Option[DataFrame] = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    // free pre-screen: a plan-stats estimate at or under the
+    // broadcast threshold stays on Catalyst's per-iteration
+    // broadcast, whose build cost that size bounds (and a claimed
+    // LogicalRDD has no stats, so it would LOSE the conversion).
+    // Estimate-big statics claim DIRECTLY from the source plan —
+    // one scan+shuffle+checkpoint job; the iterations read only
+    // the claim, so persisting the unclaimed side first (as the
+    // fragment path once did: persist+count+re-scan) is pure setup
+    // overhead (~7s vs ~2.5s on sf10's 2.6M-row edge set).
+    // SENTINEL estimates (RDD-backed EDBs report
+    // defaultSizeInBytes = Long.MaxValue, and join estimates
+    // compound it) are no measurement at all: those pay the old
+    // persist+count so a tiny registered RDD keeps its broadcast
+    // loop instead of being claimed blind.
+    val sentinel = BigInt(1L) << 50 // ~1 PiB: past any real estimate
+    val df0 = predDF(sp)
+    val est = df0.queryExecution.optimizedPlan.stats.sizeInBytes
+    val (df, size) =
+      if (est < sentinel) (df0, est)
+      else {
+        materializedStatic(sp)
+        // fresh frame over the same plan: the memoized Dataset's
+        // lazy optimizedPlan was forced for the estimate above and
+        // would keep reporting the pre-persist sentinel — a new
+        // QueryExecution picks up the populated InMemoryRelation's
+        // real cached-batch sizes
+        val fresh = org.apache.spark.sql.GraftColumnBridge
+          .onSession(spark, cachedStatic(sp))
+        (fresh, fresh.queryExecution.optimizedPlan.stats.sizeInBytes)
+      }
+    if (size <= BigInt(autoBroadcastBytes)) None
+    else {
+      val keyCols = keyIdx.map(df.columns(_))
+      val (ck, held, n) = org.apache.spark.sql.GraftColumnBridge
+        .checkpointWithPartitioning(
+          df.repartition(nParts, keyCols.map(df(_)): _*), keyCols, nParts)
+      track(ck)
+      if (held) {
+        materializedStatics.getOrElseUpdate(sp, (ck, n))
+        Some(ck)
+      } else {
+        retire(ck)
+        materializedStatics.getOrElseUpdate(sp, (df, n))
+        None
+      }
+    }
+  }
+
+  /** The fragment loop's partition count: min(session shuffle
+    * partitions, cluster parallelism), NOT the raw session setting.
+    * Sessions sized for spill safety on wide pairwise joins (e.g.
+    * ScaleBench's 4x-cores rule) over-partition this loop — with the
+    * claims pinning the count and AQE coalescing scoped off, every
+    * iteration then runs cores*k short tasks of mostly fixed cost
+    * (sf10 dl_cc A/B: 35.7s at 128 parts vs 16.3s at 32 on
+    * local[32]). defaultParallelism = total executor cores, which scales the count with the cluster
+    * exactly as a deploy wants; per-partition loop state is frontier-
+    * or fragment-sized, never a wide-join buffer, so the spill rule
+    * doesn't apply. Explicit override for deployments that know
+    * better: spark.datalog.recursion.monotonic.fragmentstate.parts. */
+  private def fragmentParts(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.conf
+      .getOption("spark.datalog.recursion.monotonic.fragmentstate.parts")
+      .map(_.toInt).filter(_ > 0)
+      .getOrElse(math.min(
+        spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
+        spark.sparkContext.defaultParallelism).max(1))
 
   /** Append-only FRAGMENT STATE for mmin/mmax fixpoints — the answer to
     * the r17-priced state-rescan gap (~7 full-state checkpoint rewrites
@@ -3301,24 +3423,7 @@ final class Evaluator(
       headOrder: Seq[Column],
       reAgg: DataFrame => DataFrame): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    // Loop partition count: min(session shuffle partitions, cluster
-    // parallelism), NOT the raw session setting. Sessions sized for
-    // spill safety on wide pairwise joins (e.g. ScaleBench's 4x-cores
-    // rule) over-partition this loop — with the claims pinning the
-    // count and AQE coalescing scoped off, every iteration then runs
-    // cores*k short tasks of mostly fixed cost (sf10 dl_cc A/B: 35.7s
-    // at 128 parts vs 16.3s at 32 on local[32]). defaultParallelism =
-    // total executor cores, which scales the count with the cluster
-    // exactly as a deploy wants; per-partition loop state is frontier-
-    // or fragment-sized, never a wide-join buffer, so the spill rule
-    // doesn't apply. Explicit override for deployments that know
-    // better: spark.datalog.recursion.monotonic.fragmentstate.parts.
-    val nParts = spark.conf
-      .getOption("spark.datalog.recursion.monotonic.fragmentstate.parts")
-      .map(_.toInt).filter(_ > 0)
-      .getOrElse(math.min(
-        spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-        spark.sparkContext.defaultParallelism).max(1))
+    val nParts = fragmentParts(spark)
     monotonicFragmentRuns += 1
 
     def claimCounted(df: DataFrame): (DataFrame, Long) = {
@@ -3559,7 +3664,8 @@ final class Evaluator(
     * aggregate values become visible within the round (Gauss-Seidel);
     * the inflationary max-merge fixpoint is schedule-independent, so
     * this converges to the relational loop's exact state. Caps:
-    * statics ≤1M rows (memoized limit-probed collects), support ≤2M
+    * statics ≤ 2^20 rows (memoized, sized by exact count before any
+    * row moves — see staticRowsMemo), support ≤2M
     * entries — a mid-loop overflow bails to the relational path (its
     * work is redone there; driver memory stays bounded). Returns None
     * on any ineligible shape or cap overflow. */

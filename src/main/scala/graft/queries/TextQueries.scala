@@ -475,9 +475,15 @@ object TextQueries extends QueryPack {
           BigInt(2L * 1024 * 1024)
     }
     val gg =
-      if (ckptOn)
-        org.apache.spark.sql.GraftColumnBridge.localCheckpointCounted(ggLazy)._1
-      else ggLazy
+      if (ckptOn) {
+        val ck =
+          org.apache.spark.sql.GraftColumnBridge.localCheckpointCounted(ggLazy)._1
+        // tracked so releaseNewSince/releaseAll (and the bench's
+        // stall-retry rollback) unpersist the posting's blocks
+        org.apache.spark.sql.GraftColumnBridge.checkpointedRDD(ck)
+          .foreach(PackResources.trackRDD)
+        ck
+      } else ggLazy
     val m = gg.select(col("ng"), col("doc_id").as("d1"), col("p").as("p1"))
       .join(gg.select(col("ng"), col("doc_id").as("d2"), col("p").as("p2")), "ng")
       .filter(col("d1") < col("d2"))

@@ -2,20 +2,17 @@ package graft.datalog
 
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
-import scala.io.Source
 
-/** Fixpoints at the reference's benchmark-graph scale (read-only CSV
-  * resources from /root/reference/datalog/src/test/resources — data,
-  * not code): reachability over the 100,185-edge random graph checked
-  * against an in-memory BFS oracle. */
+/** Fixpoints at the reference's benchmark-graph scale: reachability
+  * over a seeded G(10k, 100,185) random graph (the shape of the
+  * reference's gnp10K resource), loaded from CSV and checked against
+  * an in-memory BFS oracle. */
 class LargeGraphSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val gnp = "/root/reference/datalog/src/test/resources/gnp10K.csv"
 
-  test("reach over gnp10K (100k edges) matches BFS") {
-    val edges = Source.fromFile(gnp).getLines()
-      .map { l => val p = l.split(","); (p(0).trim.toInt, p(1).trim.toInt) }
-      .toSeq
+  test("reach over a G(10k, 100k) graph matches BFS") {
+    val edges = TestGraphs.gnm(n = 10000, m = 100185, seed = 10L)
+    val gnp = TestGraphs.writeCsv(edges, "gnp10k-")
     // BFS oracle from vertex 0
     val adj = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     val seen = mutable.Set(0)

@@ -91,4 +91,32 @@ class SpanDedupSpec extends AnyFunSuite {
     assert(want.count { case (a, b, _, _, _) => a == 4L && b == 5L } >= 2,
       "two islands on one diagonal expected")
   }
+
+  test("the checkpointed posting is tracked and released with the pack") {
+    val rnd = new scala.util.Random(7)
+    val shared = Array.fill(20)(s"w${rnd.nextInt(100000)}")
+    val docs = (0L until 4L).map { i =>
+      val t = Array.fill(40)(s"w${rnd.nextInt(100000)}")
+      System.arraycopy(shared, 0, t, 5, shared.length)
+      i -> t.mkString(" ")
+    }
+    import spark.implicits._
+    val df = docs.toDF("doc_id", "text")
+    val key = "spark.graft.span.ckpt"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    val snap = PackResources.snapshot()
+    try {
+      val got = TextQueries.spanDedup(df, maxDf = 1000000).collect()
+      assert(got.length == 6, s"one 20-token span per doc pair, got ${got.length}")
+      val fresh = PackResources.snapshot().rdds -- snap.rdds
+      assert(fresh.size == 1, s"expected the posting checkpoint tracked, got $fresh")
+      PackResources.releaseNewSince(snap)
+      assert(fresh.forall(r => !spark.sparkContext.getPersistentRDDs.contains(r.id)),
+        "releaseNewSince left the posting checkpoint persisted")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
